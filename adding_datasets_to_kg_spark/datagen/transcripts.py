@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import local_frame
+
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType(), False),
@@ -99,17 +101,18 @@ EPOCH = dt.datetime(2024, 1, 1)
 
 
 def gene_lexicon_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GENES, "symbol string, name string, gene_id string")
+    return local_frame(spark, GENES, "symbol string, name string, gene_id string")
 
 
 def disease_lexicon_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        DISEASES, "name string, disease_id string, assoc_gene_id string"
+    return local_frame(
+        spark, DISEASES, "name string, disease_id string, assoc_gene_id string"
     )
 
 
 def variant_lexicon_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         VARIANTS,
         "rsid string, caid string, hgvs string, gene_id string, consequence string",
     )
@@ -126,7 +129,7 @@ def id_equivalences_df(spark: SparkSession) -> DataFrame:
     for _, did, _ in DISEASES[:6]:
         n = did.split(":")[1]
         rows.append((did, f"MONDO:{n.zfill(7)}"))
-    return spark.createDataFrame(rows, "id_a string, id_b string")
+    return local_frame(spark, rows, "id_a string, id_b string")
 
 
 def predicate_map_df(spark: SparkSession) -> DataFrame:
@@ -136,7 +139,7 @@ def predicate_map_df(spark: SparkSession) -> DataFrame:
         ("biolink:genetically_associated_with", "biolink:genetically_associated_with"),
         ("associated_with", "biolink:gene_associated_with_condition"),
     ]
-    return spark.createDataFrame(rows, "raw_predicate string, biolink_predicate string")
+    return local_frame(spark, rows, "raw_predicate string, biolink_predicate string")
 
 
 def generate_corpus(
@@ -180,10 +183,6 @@ def generate_corpus(
                          t0 + dt.timedelta(seconds=30 * i)))
     rng.shuffle(rows)  # out-of-order physical layout
     return rows
-
-
-def corpus_df(spark: SparkSession, n_convs: int = 50, seed: int = 7) -> DataFrame:
-    return spark.createDataFrame(generate_corpus(n_convs, seed), TRANSCRIPT_SCHEMA)
 
 
 def generate_transcripts_distributed(

@@ -18,6 +18,8 @@ and metadata dicts only.
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -64,18 +66,21 @@ def read_text(spark: SparkSession, path_str: str) -> str:
 
 def write_text_atomic(spark: SparkSession, path_str: str, content: str) -> None:
     """Write-then-rename commit: the file never exists half-written under its
-    final name (the checkpoint protocol's atomicity requirement).
+    final name (the checkpoint protocol's atomicity requirement) — content
+    atomicity holds on every scheme.
 
-    Rename-over-existing uses ``FileContext.rename(…, Rename.OVERWRITE)``,
-    which is a single atomic overwrite on HDFS and local file: — a concurrent
-    reader of manifest.json / a checkpoint row during a rewrite sees either
-    the old or the new complete file, never a missing one. Schemes with no
-    ``AbstractFileSystem`` binding (e.g. s3a without ``fs.AbstractFileSystem.
-    s3a.impl``) fall back to delete-then-rename; there, and on object stores
-    where rename is copy+delete anyway, a reader can observe a brief
-    missing-file window during a REWRITE (first writes are unaffected) and
-    must retry — content atomicity (no half-written bytes) still holds on
-    every scheme."""
+    Rename-over-existing uses ``FileContext.rename(…, Rename.OVERWRITE)``.
+    On HDFS that is a single atomic overwrite: a concurrent reader of
+    manifest.json / a checkpoint row during a rewrite sees either the old or
+    the new complete file, never a missing one. Everywhere else the overwrite
+    is NOT atomic: local ``file:`` (``LocalFs``) implements it as
+    delete-then-rename, object stores rename by copy+delete, and schemes with
+    no ``AbstractFileSystem`` binding (e.g. s3a without
+    ``fs.AbstractFileSystem.s3a.impl``) take the explicit delete-then-rename
+    fallback below. There a reader can observe a brief missing-file window
+    during a REWRITE (first writes are unaffected) and must retry.
+
+    A failed rename raises; only the missing-binding case falls back."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     fs, final_path = _fs_path(spark, path_str)
@@ -90,13 +95,20 @@ def write_text_atomic(spark: SparkSession, path_str: str, content: str) -> None:
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             final_path.toUri(), conf
         )
-        opts = spark.sparkContext._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1
-        )
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc.rename(tmp_path, final_path, opts)  # throws on failure
-    except Exception:  # noqa: BLE001 — scheme without an AbstractFileSystem
+    except Py4JJavaError as exc:
+        if not is_instance_of(
+            spark.sparkContext._gateway,
+            exc.java_exception,
+            "org.apache.hadoop.fs.UnsupportedFileSystemException",
+        ):
+            raise
         if fs.exists(final_path):
             fs.delete(final_path, False)
         if not fs.rename(tmp_path, final_path):
-            raise IOError(f"rename {tmp_str} -> {path_str} failed") from None
+            raise IOError(f"rename {tmp_str} -> {path_str} failed") from exc
+        return
+    opts = spark.sparkContext._gateway.new_array(
+        jvm.org.apache.hadoop.fs.Options.Rename, 1
+    )
+    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+    fc.rename(tmp_path, final_path, opts)  # throws on failure

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
+from .session import local_frame
 
 
 def bucket_expr(col: str, n_buckets: int) -> F.Column:
@@ -105,7 +106,7 @@ def read_table(
     ]
     if not paths:
         schema = StructType.fromJson(read_manifest(spark, root, name)["schema"])
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         # partition column materializes on real reads; keep shape identical
         return empty.withColumn("bucket", F.lit(None).cast("int"))
     return spark.read.option("basePath", data_path).parquet(*paths)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 # MEASURED bound (jobs/bench_cc_crossover.py, BENCH.md §5a; local[32],
 # CURIE-string clique edges): the WALL crossover is beyond 2M edges — driver
@@ -103,10 +105,7 @@ def connected_components(
             (r[0], r[1])
             for r in edges.select(id_a, id_b).collect()
         ]
-        out = _driver_union_find(pairs)
-        if not out:
-            return spark.createDataFrame([], "id string, canonical_id string")
-        return spark.createDataFrame(out, "id string, canonical_id string")
+        return local_frame(spark, _driver_union_find(pairs), "id string, canonical_id string")
     labels, _ = star_contraction(edges, id_a, id_b, max_iterations)
     return labels
 

@@ -107,14 +107,34 @@ def decode_video_frames(payload: bytes, frame_stride_ms: int = 1000):
             # Containers without per-frame pts (or without a time_base) would
             # all map to ms=0 and silently degrade stride sampling to a single
             # frame — derive ms from the decode index × average frame duration
-            # instead (30 fps as the last-resort guess).
-            rate = stream.average_rate or stream.guessed_rate or 30
-            next_ms = 0
+            # instead (30 fps as the last-resort guess). getattr: older PyAV
+            # builds lack one or both rate attributes, and an AttributeError
+            # here would send every video down the stub path.
+            rate = (
+                getattr(stream, "average_rate", None)
+                or getattr(stream, "guessed_rate", None)
+                or 30
+            )
+            frame_ms = 1000 / float(rate)
+            # One clock per stream, fixed by its first frame: switching
+            # between pts and decode index mid-stream makes time jump, and
+            # frames behind the jump would be skipped. A pts-clocked frame
+            # without pts sits one frame duration after its predecessor.
+            use_pts = None
+            t = 0.0
+            next_ms = None
             for idx, frame in enumerate(container.decode(stream)):
-                if frame.pts is not None and tb is not None:
-                    ms = int(frame.pts * float(tb) * 1000)
+                if use_pts is None:
+                    use_pts = frame.pts is not None and tb is not None
+                if not use_pts:
+                    t = idx * frame_ms
+                elif frame.pts is not None:
+                    t = frame.pts * float(tb) * 1000
                 else:
-                    ms = int(idx * 1000 / float(rate))
+                    t += frame_ms
+                ms = int(t)
+                if next_ms is None:  # the sampling grid starts at the first frame
+                    next_ms = ms
                 if ms >= next_ms:
                     frames.append((ms, frame.to_ndarray(format="rgb24")))
                     next_ms += frame_stride_ms

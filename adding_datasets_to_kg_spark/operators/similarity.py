@@ -8,8 +8,9 @@ Two tiers:
   The 100 TB path: candidate set shrinks by ~n_cells/n_probe, and the join
   is an equi-join on cell id.
 
-All distances computed with JVM-side zip_with/aggregate expressions in
-double precision (functions.vectors) — no Python in the hot path.
+All distances computed JVM-side in double precision with the unrolled,
+codegen'd ``dot_unrolled``/``norm_unrolled`` expressions (functions.vectors;
+vectors cast once per row by ``as_double``) — no Python in the hot path.
 """
 
 from __future__ import annotations

@@ -47,6 +47,7 @@ from ..operators.dedup import (
 from ..operators.merge import merge_nodes
 from ..operators.multimodal import attach_media, extract_features, resize_images, sample_frames
 from ..operators.similarity import topk_bruteforce, topk_ivf
+from ..session import local_frame
 from ..sources.kgx import conform_nodes, infer_property_types, nodes_to_typed_csv_df
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1132,7 +1133,8 @@ def g_predicate_normalize(spark, sf_dir):
     """G2 (normalize.py:28,35): broadcast predicate-map rewrite with
     passthrough for unmapped predicates."""
     e = _t(spark, sf_dir, "events")
-    spark_map = spark.createDataFrame(
+    spark_map = local_frame(
+        spark,
         [("click", "biolink:interacts_with"), ("purchase", "biolink:acquires")],
         "raw_predicate string, biolink_predicate string",
     )
@@ -1235,7 +1237,7 @@ def kg_mentions_docs(spark, sf_dir):
         "doc_id", F.explode(F.array_distinct(tokens(F.lower(F.col("text"))))).alias("term")
     )
     lex = F.broadcast(
-        spark.createDataFrame([(t,) for t in lexicon], "term string")
+        local_frame(spark, [(t,) for t in lexicon], "term string")
     )
     return (
         toks.join(lex, "term")

@@ -250,11 +250,6 @@ def _predicate_census(
     return [t for t, c in counts.items() if c >= 2], set(pm)
 
 
-def _ambiguous_norm_targets(edges: DataFrame, predicate_map: DataFrame | None) -> list[str]:
-    """Back-compat wrapper: just the ambiguous-target list."""
-    return _predicate_census(edges, predicate_map)[0]
-
-
 def canonicalize_graph(
     nodes: DataFrame, edges: DataFrame, lex: Lexicons, remap_edges: bool = True
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int | None]:

@@ -10,14 +10,18 @@ Design notes (scale-first):
   values in operators).
 - Arrow enabled for every pandas UDF path (mention detection, multimodal);
   per-batch size bounded so executor memory stays flat at 100 TB scale.
+  Tables built from driver rows cross into the JVM as one Arrow table
+  (:func:`local_frame`), never as a pickled Python RDD.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -108,6 +112,14 @@ def get_spark(
         # --- Arrow for vectorized pandas UDFs (input_hint: no per-row Python) ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # local_frame tables up to 1 MiB of Arrow batches become a
+        # LocalRelation, larger ones an RDD of Arrow batches (both JVM-only).
+        # A LocalRelation ships its rows from the driver with every scan:
+        # measured on 4 cores, one groupBy over 50k / 1M id pairs took
+        # 0.3 / 3.5 s as a LocalRelation against 0.13 / 0.85 s as Arrow
+        # batches; at 20k pairs (0.7 MiB) the two are even. Spark's 48 MiB
+        # default would keep the 1M-pair union-find output local.
+        .config("spark.sql.execution.arrow.localRelationThreshold", str(1024 * 1024))
         # --- scan sizing: bounded input splits so partitions fit executor memory ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Split small inputs across all cores: maxSplitBytes =
@@ -138,3 +150,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema`` column
+    order) that lives entirely in the JVM.
+
+    ``spark.createDataFrame(<list>, schema)`` pickles the rows into a Python
+    RDD (``Scan ExistingRDD``): every scan of the table starts a Python-worker
+    task set, and the relation has no size statistics. The same rows sent as
+    one ``pyarrow.Table`` become a ``LocalRelation`` instead — a
+    ``LocalTableScan`` with exact statistics whose scans start no Python — so
+    the package's only Python on the pipeline path stays the mention UDF.
+    Tables past ``spark.sql.execution.arrow.localRelationThreshold`` (see
+    :func:`get_spark`) become an RDD of Arrow batches instead, which is
+    JVM-only too. Every package-side table built from driver rows goes
+    through here.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = spark._parse_ddl(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -51,10 +51,6 @@ NODE_COLS = [f.name for f in NODE_SCHEMA.fields]
 EDGE_COLS = [f.name for f in EDGE_SCHEMA.fields]
 
 
-def empty_nodes(spark) -> DataFrame:
-    return spark.createDataFrame([], NODE_SCHEMA)
-
-
 def conform_nodes(df: DataFrame) -> DataFrame:
     """Project/backfill to the canonical node schema."""
     cols = {c: F.col(c) for c in df.columns}

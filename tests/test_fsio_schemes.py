@@ -17,6 +17,7 @@ Hadoop FileSystem classes:
 import json
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from adding_datasets_to_kg_spark import fsio
@@ -97,3 +98,59 @@ def test_fsio_small_files_rawlocal_override(spark, tmp_path):
     finally:
         conf.unset("fs.file.impl")
         conf.unset("fs.file.impl.disable.cache")
+
+
+def test_write_text_atomic_rename_failure_raises(spark, tmp_path):
+    """A failed overwrite-rename raises the rename's own error instead of
+    falling back to delete-then-rename. The destination here is a non-empty
+    directory, which no file rename may replace; it survives untouched."""
+    dest = tmp_path / "dest"
+    dest.mkdir()
+    (dest / "keep").write_text("x")
+    with pytest.raises(Py4JJavaError, match="must both be directories"):
+        fsio.write_text_atomic(spark, f"file://{dest}", "{}")
+    assert (dest / "keep").read_text() == "x"
+
+
+class _FailingRename:
+    """A Hadoop FileSystem whose rename reports failure."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        return False
+
+
+def test_write_text_atomic_fallback_chains_rename_failure(spark, tmp_path, monkeypatch):
+    """A scheme with no AbstractFileSystem binding (here file: with its
+    binding removed) takes the delete-then-rename fallback. A failed
+    fallback rename raises IOError chained to the error that chose the
+    fallback."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "fs.AbstractFileSystem.file.impl"
+    binding = conf.get(key)
+    p = f"file://{tmp_path}/row.json"
+    conf.unset(key)
+    try:
+        fsio.write_text_atomic(spark, p, "old")
+        fsio.write_text_atomic(spark, p, "new")  # rewrite through the fallback
+        assert fsio.read_text(spark, p) == "new"
+
+        real = fsio._fs_path
+
+        def failing_fs_path(spark_, path_str):
+            fs, path = real(spark_, path_str)
+            return _FailingRename(fs), path
+
+        monkeypatch.setattr(fsio, "_fs_path", failing_fs_path)
+        with pytest.raises(OSError, match="failed") as err:
+            fsio.write_text_atomic(spark, p, "lost")
+    finally:
+        conf.set(key, binding)
+    cause = err.value.__cause__
+    assert isinstance(cause, Py4JJavaError)
+    assert "UnsupportedFileSystemException" in cause.java_exception.getClass().getName()

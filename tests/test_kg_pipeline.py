@@ -96,7 +96,7 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
         merge_nodes_targeted,
     )
     from adding_datasets_to_kg_spark.plans.pipeline import (
-        _ambiguous_norm_targets,
+        _predicate_census,
         build_nodes_for_edges,
         canonicalize_graph,
         emit_triples,
@@ -134,7 +134,7 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
     # Edge side: targeted dedup must keep exactly the keys a full dedup
     # keeps (row choice among colliding property payloads is unspecified in
     # BOTH paths, so compare the deduped key multiset, not full rows).
-    ambig = _ambiguous_norm_targets(edges_pre, lex.predicate_map)
+    ambig = _predicate_census(edges_pre, lex.predicate_map)[0]
     full_e = dedup_edges(edges)
     targeted_e = dedup_edges_targeted(edges, canon_ids, ambig)
 
@@ -154,8 +154,8 @@ def test_finalize_graph_expr_split_equals_join_fallback(corpus, lex):
     same node rows, same deduped edge keys, same endpoint remaps, same
     original_* provenance columns."""
     from adding_datasets_to_kg_spark.plans.pipeline import (
-        _ambiguous_norm_targets,
         _finalize_graph,
+        _predicate_census,
         build_nodes_for_edges,
         canonicalize_graph,
         emit_triples,
@@ -173,7 +173,7 @@ def test_finalize_graph_expr_split_equals_join_fallback(corpus, lex):
         nodes_pre, edges_pre, lex, remap_edges=False
     )
     assert norm_map.count() > 0  # the split must actually be exercised
-    ambig = _ambiguous_norm_targets(edges_pre, lex.predicate_map)
+    ambig = _predicate_census(edges_pre, lex.predicate_map)[0]
 
     n_expr, e_expr = _finalize_graph(nodes, edges, norm_map, lex.predicate_map, ambig)
     # max_inset_ids=0 forces the broadcast-join fallback on the same inputs

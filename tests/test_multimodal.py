@@ -137,3 +137,78 @@ def test_real_video_frames_when_av_present(spark):
     )
     rows = mm.sample_frames(media, frame_stride_ms=1000).collect()
     assert rows and all(len(bytes(r.frame_payload)) > 0 for r in rows)
+
+
+class _FakeFrame:
+    def __init__(self, idx, pts):
+        self.idx, self.pts = idx, pts
+
+    def to_ndarray(self, format):
+        assert format == "rgb24"
+        return self.idx  # stands in for the pixels: which frame was sampled
+
+
+class _FakeStream:
+    """A PyAV video stream; omitted rate attributes model an older PyAV."""
+
+    def __init__(self, time_base, **rates):
+        self.time_base = time_base
+        self.__dict__.update(rates)
+
+
+class _FakeContainer:
+    def __init__(self, stream, frames):
+        self.streams = type("Streams", (), {"video": [stream]})()
+        self._frames = frames
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def decode(self, stream):
+        return iter(self._frames)
+
+
+def _fake_av(monkeypatch, stream, pts):
+    """Install a fake ``av`` module serving one video of len(pts) frames;
+    runs with or without PyAV installed."""
+    frames = [_FakeFrame(i, p) for i, p in enumerate(pts)]
+    fake = type("FakeAv", (), {"open": staticmethod(lambda buf: _FakeContainer(stream, frames))})
+    monkeypatch.setattr(mm, "_av", fake)
+    monkeypatch.setattr(mm, "HAS_VIDEO", True)
+
+
+def test_video_decode_without_rate_attributes(monkeypatch):
+    """A PyAV build whose streams lack average_rate and guessed_rate still
+    decodes (30 fps fallback) instead of sending every video to the stub."""
+    _fake_av(monkeypatch, _FakeStream(time_base=None), [None] * 90)
+    got = mm.decode_video_frames(b"video", frame_stride_ms=1000)
+    assert got == [(0, 0), (1000, 30), (2000, 60)]
+
+
+def test_video_decode_one_clock_per_stream(monkeypatch):
+    """Mixed pts never switch a stream's clock mid-decode, and the sampling
+    grid starts at the stream's first frame."""
+    from fractions import Fraction
+
+    ms_tb = Fraction(1, 1000)
+    pts = [5000 + 40 * i for i in range(90)]  # 25 fps, starting at 5 s
+
+    # First frame without pts: the whole stream runs on the decode-index
+    # clock, even though later pts sit 5 s ahead of it. Switching clocks
+    # would sample a burst of frames right after the jump.
+    stream = _FakeStream(time_base=ms_tb, average_rate=Fraction(25), guessed_rate=None)
+    _fake_av(monkeypatch, stream, [None] + pts[1:])
+    assert mm.decode_video_frames(b"video") == [(0, 0), (1000, 25), (2000, 50), (3000, 75)]
+
+    # First frame with pts: a pts gap continues one frame duration past the
+    # previous frame instead of falling back to the index clock, so the
+    # sample due inside the gap (frame 25, at 6 s) is kept.
+    gappy = pts[:20] + [None] * 10 + pts[30:]
+    stream = _FakeStream(time_base=ms_tb, average_rate=None, guessed_rate=Fraction(25))
+    _fake_av(monkeypatch, stream, gappy)
+    assert mm.decode_video_frames(b"video") == [
+        (5000, 0), (6000, 25), (7000, 50), (8000, 75)
+    ]
