@@ -207,86 +207,6 @@ def dedup_minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "do
 
 # --- simhash ----------------------------------------------------------------
 
-def _nibble_val(hex_char: Column) -> Column:
-    return F.instr(F.lit("0123456789abcdef"), hex_char) - 1
-
-
-def simhash16(text_col: Column) -> Column:
-    """16-bit simhash from whitespace tokens.
-
-    Bit j (0..15) comes from bit (j mod 4) of md5-hex nibble (j div 4): sum
-    +1/-1 over tokens, sign → bit. Pure expressions; the identical formula is
-    generated as SQL for the DuckDB oracle (simhash16_sql)."""
-    toks = tokens(text_col)
-
-    def bit_merger(nib: int, bit: int):
-        def merge(acc, t):
-            return acc + F.when(
-                F.shiftright(_nibble_val(F.substring(F.md5(t), nib + 1, 1)), bit)
-                .bitwiseAND(F.lit(1))
-                == 1,
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-
-        return merge
-
-    bits = []
-    for j in range(16):
-        contrib = F.aggregate(toks, F.lit(0), bit_merger(j // 4, j % 4))
-        bits.append(F.when(contrib > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total
-
-
-def simhash16_fingerprints(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
-    """(id, simhash int) — simhash16 values via the explode → codegen'd
-    hash-aggregate shape (see simhash64_fingerprints for why this beats
-    interpreted HOF folds ~10×): per token, the 4 relevant md5 hex nibbles
-    pack into one 16-bit long via ``conv`` (nibble i at bits 4*(3-i)), then
-    groupBy(id) with 16 SUM(±1) aggregates of pure shift/and arithmetic.
-    Values are bit-identical to ``simhash16(col)``; token-less docs keep
-    simhash 0 via explode_outer + NULL sums."""
-    packed = docs.select(
-        F.col(id_col), F.explode_outer(tokens(text_col)).alias("_t")
-    ).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5("_t"), 1, 4), 16, 10).cast("long").alias("_n"),
-    )
-
-    counted = packed.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.shiftright(F.col("_n"), 4 * (3 - j // 4) + j % 4)
-                .bitwiseAND(F.lit(1)).cast("int") * 2 - 1
-            ).alias(f"c{j}")
-            for j in range(16)
-        ]
-    )
-    total = None
-    for j in range(16):
-        term = F.when(F.col(f"c{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        total = term if total is None else total + term
-    return counted.select(id_col, total.cast("int").alias("simhash"))
-
-
-def simhash16_sql(text_expr: str) -> str:
-    """DuckDB SQL generating the identical 16-bit simhash (oracle side)."""
-    tok = f"list_filter(string_split(trim(regexp_replace({text_expr}, '\\s+', ' ', 'g')), ' '), t -> t <> '')"
-    bit_terms = []
-    for j in range(16):
-        nib, bit = j // 4, j % 4
-        contrib = (
-            f"list_sum(list_transform({tok}, t -> CASE WHEN "
-            f"((strpos('0123456789abcdef', substr(md5(t), {nib + 1}, 1)) - 1) >> {bit}) & 1 = 1 "
-            f"THEN 1 ELSE -1 END))"
-        )
-        bit_terms.append(f"(CASE WHEN {contrib} > 0 THEN {1 << j} ELSE 0 END)")
-    return "(" + " + ".join(bit_terms) + ")"
-
-
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 16
@@ -297,8 +217,7 @@ def simhash64_fingerprints(docs: DataFrame, text_col: str = "text",
     """(id, b0..b3) — 64-bit simhash as 4×16-bit band values.
 
     Bit j (0..63) = sign of Σ_tokens ±1, where the per-token contribution is
-    bit (j mod 4) of md5-hex nibble (j div 4) — the simhash16 formula
-    extended to nibbles 0..15.
+    bit (j mod 4) of md5-hex nibble (j div 4), nibbles 0..15.
 
     Explode → codegen'd hash-aggregate shape, deliberately: higher-order
     ``F.aggregate`` folds are evaluated INTERPRETED (HOFs don't participate

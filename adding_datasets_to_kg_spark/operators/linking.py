@@ -26,44 +26,34 @@ from ..sources.kgx import conform_edges
 INFORES = "infores:transcripts"
 
 
-def link_best_candidate(mentions: DataFrame, keep_term: bool = True) -> DataFrame:
+def link_best_candidate(mentions: DataFrame) -> DataFrame:
     """Pick one entity per (conv_id, turn_idx, token_pos): longest surface
     form wins, then lexicographic entity_id — pure, order-independent.
+    Returns (conv_id, turn_idx, entity_id, entity_type, token_pos).
 
     Implemented as a hash aggregate (min_by over the (-length, entity_id)
     sort key) rather than a row_number window: same semantics, but partial
     aggregation runs map-side and no per-partition sort is needed — the
     window variant was a full sort of the mention stream.
 
-    ``keep_term=False`` is the corpus-scale projection for callers that
-    discard the surface form right after linking (the KG pipeline keeps only
-    (conv, turn, entity) — see run_pipeline): the tiebreak needs just
-    ``length(term)``, so the aggregate's shuffle and per-group min_by buffer
-    carry a 4-byte ``term_len`` instead of the term string. Catalyst cannot
-    prune a field INSIDE min_by's struct payload, so the projection is
-    explicit. Identical winners by construction: the sort key
-    (-length(term), entity_id) is unchanged. Accepts a pre-projected input
-    that already carries ``term_len`` instead of ``term`` (so the narrowing
-    can happen BEFORE an upstream repartition — the whole point)."""
-    has_len = "term_len" in mentions.columns
-    term_len = F.col("term_len") if has_len else F.length("term")
+    ``mentions`` carry the surface form's length as ``term_len``, not the
+    term string: the tiebreak needs only the length, so the aggregate's
+    shuffle and per-group min_by buffer carry 4 bytes instead of the term.
+    Catalyst cannot prune a field INSIDE min_by's struct payload, so the
+    narrowing is the caller's explicit projection — made BEFORE an upstream
+    repartition (see plans.pipeline.extract_linked_mentions)."""
     key = F.struct(
-        (-term_len).alias("neg_len"), F.col("entity_id").alias("eid")
+        (-F.col("term_len")).alias("neg_len"), F.col("entity_id").alias("eid")
     )
-    if keep_term:
-        payload = F.struct("term", "entity_id", "entity_type")
-        out_cols = ["term", "entity_id", "entity_type"]
-    else:
-        payload = F.struct("entity_id", "entity_type")
-        out_cols = ["entity_id", "entity_type"]
-    best = F.min_by(payload, key).alias("_best")
+    best = F.min_by(F.struct("entity_id", "entity_type"), key).alias("_best")
     return (
         mentions.groupBy("conv_id", "turn_idx", "token_pos")
         .agg(best)
         .select(
             "conv_id",
             "turn_idx",
-            *[F.col(f"_best.{c}").alias(c) for c in out_cols],
+            "_best.entity_id",
+            "_best.entity_type",
             "token_pos",
         )
     )

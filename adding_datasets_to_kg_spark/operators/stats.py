@@ -1,13 +1,13 @@
-"""Graph validation + summary metadata + degree analytics.
+"""Graph validation + summary metadata + node degrees.
 
-Reference parity (G5/G6, A5-A8 in SURVEY.md §2):
-- metadata JSON            ← /root/reference/src/midas/metadata.py:5-10
+Reference parity (G5/G6 in SURVEY.md §2):
+- metadata JSON            ← reference src/midas/metadata.py:5-10
   (validate_graph → {node_count, edge_count, per-category counts,
   per-predicate counts}); census shape rendered in reference README.md:278-306.
 - dangling-edge check      ← validation pass [ORION, public]: edges whose
   subject/object has no node row → left_anti join.
-- degree histogram         ← agent notebook cell 3 +
-  /root/reference/data/goldenkg_v1_stats.csv (200-bin histogram).
+- node degrees             ← agent notebook cell 3 (the registry's A7/A8
+  entry carries the histogram and summary shape).
 
 Scale notes: category counts explode the (small) category array — one
 shuffle; predicate counts are a map-side-combinable groupBy; the degree agg
@@ -62,46 +62,6 @@ def node_degrees(edges: DataFrame, salt_buckets: int = 16) -> DataFrame:
     )
     partial = salted.groupBy("id", "_salt").agg(F.count(F.lit(1)).alias("c"))
     return partial.groupBy("id").agg(F.sum("c").alias("degree"))
-
-
-def degree_histogram(edges: DataFrame, n_bins: int = 200) -> DataFrame:
-    """Fixed-width degree histogram (goldenkg_v1_stats.csv shape).
-
-    The degree table feeds two actions (bounds collect + binning), so it is
-    persisted across them and released once the small binned result is
-    materialized — without this the full edge scan + salted aggregation ran
-    twice per histogram.
-    """
-    from pyspark import StorageLevel
-
-    deg = node_degrees(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    bounds = deg.agg(
-        F.min("degree").alias("lo"), F.max("degree").alias("hi")
-    ).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-    width = max((hi - lo) / n_bins, 1e-9) if hi is not None else 1.0
-    hist = (
-        deg.withColumn(
-            "bin",
-            F.least(F.floor((F.col("degree") - F.lit(lo)) / F.lit(width)), F.lit(n_bins - 1)),
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("node_count"))
-        .orderBy("bin")
-    )
-    hist = hist.localCheckpoint(eager=True)  # small (≤ n_bins rows)
-    deg.unpersist()
-    return hist
-
-
-def degree_summary(edges: DataFrame) -> DataFrame:
-    """A8: mean + exact median degree."""
-    deg = node_degrees(edges)
-    return deg.agg(
-        F.round(F.avg("degree"), 4).alias("mean_degree"),
-        F.expr("percentile(degree, 0.5)").alias("median_degree"),
-        F.max("degree").alias("max_degree"),
-    )
 
 
 def graph_metadata(nodes: DataFrame, edges: DataFrame) -> dict:

@@ -1375,13 +1375,6 @@ def q_dedup_cluster_survivors(spark, sf_dir):
     return dedup_survivors(docs, dedup_minhash_lsh(docs))
 
 
-# (The 16-bit simhash fingerprint entry was retired from the registry in
-# round 3: dedup_simhash64 supersedes it as the registered SimHash strategy
-# — its 2^16 bucket space saturates at web scale — and the driver caps how
-# many entries it checks. simhash16_fingerprints/simhash16_sql stay covered
-# by tests/test_dedup.py equivalence tests.)
-
-
 @query(
     "dedup_ngram_jaccard",
     f"""

@@ -1,21 +1,35 @@
-"""The end-to-end transcript → knowledge-graph pipeline, with per-partition
-checkpoint/resume.
+"""The end-to-end transcript → knowledge-graph pipeline: one stage graph,
+shared by the one-shot, checkpointed and streaming entry points.
 
-Stage map (SURVEY.md §7.1; reference driver /root/reference/src/midas/pipeline.py:21-47):
-  1 extract      — read transcript table, window-order turns per conversation,
-                   vectorized lexicon mention detection   (≈ convert_to_kgx)
-  2 link         — best-candidate entity linking           (≈ normalize, id side)
+Stage map (SURVEY.md §7.1; reference driver src/midas/pipeline.py:21-47):
+  1 extract      — narrow scan, conv_id repartition, vectorized lexicon
+                   mention detection                       (≈ convert_to_kgx)
+  2 link         — best-candidate entity linking, distinct
+                   (conv, turn, entity)                    (≈ normalize, id side)
   3 emit         — triple families: mentions / gene-disease / variant-cohort /
                    variant-gene                            (≈ converter edge rules)
-  4 canonicalize — CC over id_equivalences + predicate map (≈ NodeNorm + predicate_map)
-  5 merge        — node merge + edge dedup                 (≈ merge_kgx_files)
-  6 stats        — metadata dict                           (≈ validate_graph)
-  7 export       — Iceberg-layout kg.nodes / kg.edges + typed CSV
+  4 nodes        — one node row per edge endpoint, typed by CURIE prefix
+  5 canonicalize — CC over id_equivalences, node side; predicate census
+                                                           (≈ NodeNorm + predicate_map)
+  6 finalize     — endpoint remap + predicate rewrite + node merge / edge
+                   dedup                                   (≈ merge_kgx_files)
+  7 stats        — metadata dict                           (≈ validate_graph)
+  8 export       — Iceberg-layout kg_nodes / kg_edges + normalization and
+                   metadata artifacts
+
+Two functions hold the stages, and every entry point composes them:
+  front  ``linked_triples``  stages 1-3
+  tail   ``build_graph``     stages 4-8
+
+  run_pipeline               build_graph(linked_triples(turns))
+  run_pipeline_checkpointed  per bucket: linked_triples → write → commit;
+                             then build_graph(combine_bucket_triples(buckets))
+  streaming process_batch    linked_triples → write (streaming/incremental.py)
 
 Resumability (north_rule): work is partitioned by bucket(conv_id); each
 bucket's triples are written atomically (directory per bucket), then a
 checkpoint row {bucket, status, counters, lineage} is appended. On restart,
-completed buckets are skipped; the final merge reads all bucket outputs.
+completed buckets are skipped; the tail reads all bucket outputs.
 Counters double as per-partition lineage metrics.
 """
 
@@ -25,7 +39,7 @@ import json
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..icetable import bucket_expr
@@ -105,22 +119,11 @@ def load_lexicons(spark: SparkSession, lexicon_dir: str) -> Lexicons:
     )
 
 
-def ordered_turns(transcripts: DataFrame) -> DataFrame:
-    """Stable per-conversation ordering via window-over-turn_idx (north_star).
-
-    Adds ``turn_rank`` = row_number over (conv_id / turn_idx); the invariant
-    "per-turn text equality under stable turn ordering" is tested against
-    this column (physical row order is deliberately shuffled in fixtures).
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return transcripts.withColumn("turn_rank", F.row_number().over(w))
-
-
-def extract_linked_mentions(
-    transcripts: DataFrame, lex: Lexicons, keep_term: bool = True
-) -> DataFrame:
-    """Stages 1-2: narrow projection → partition by conv_id → mention UDF →
-    explode → link.
+def extract_linked_mentions(transcripts: DataFrame, lex: Lexicons) -> DataFrame:
+    """Stages 1-2: narrow projection → mention UDF → explode → partition by
+    conv_id → link → distinct. Returns the lean linked set
+    (conv_id, turn_idx, entity_id, entity_type), one row per entity per turn
+    — everything the four emit families read.
 
     The ONE explicit repartition on conv_id here is the north-star
     "explicit partitioning on conv_id buckets": every downstream
@@ -136,25 +139,25 @@ def extract_linked_mentions(
     exchanges, repartition-after plans 1). With an Iceberg bucket(conv_id)
     layout + storage-partitioned reads this shuffle disappears too.
 
-    ``keep_term=False`` (the pipeline's own mode) replaces the term string
-    with a 4-byte ``term_len`` BEFORE the conv_id exchange: every downstream
-    consumer keeps only (conv, turn, entity), so the corpus-proportional
-    mention shuffle and the link aggregate's min_by buffers never carry the
-    surface forms they are about to discard. Winner selection is unchanged
-    (the tiebreak key only ever used length(term))."""
+    The term string is replaced by a 4-byte ``term_len`` BEFORE the conv_id
+    exchange: no consumer reads the surface form, so the corpus-proportional
+    mention shuffle and the link aggregate's min_by buffers never carry it.
+    Winner selection only ever used length(term) as its tiebreak."""
     narrow = transcripts.select("conv_id", "turn_idx", "text")
     with_mentions = detect_mentions(narrow, lex.broadcast_entries())
-    mentions = explode_mentions(with_mentions, ["conv_id", "turn_idx"])
-    if not keep_term:
-        mentions = mentions.select(
-            "conv_id",
-            "turn_idx",
-            "token_pos",
-            "entity_id",
-            "entity_type",
-            F.length("term").alias("term_len"),
-        )
-    return link_best_candidate(mentions.repartition("conv_id"), keep_term=keep_term)
+    mentions = explode_mentions(with_mentions, ["conv_id", "turn_idx"]).select(
+        "conv_id",
+        "turn_idx",
+        "token_pos",
+        "entity_id",
+        "entity_type",
+        F.length("term").alias("term_len"),
+    )
+    return (
+        link_best_candidate(mentions.repartition("conv_id"))
+        .select("conv_id", "turn_idx", "entity_id", "entity_type")
+        .dropDuplicates()
+    )
 
 
 def emit_triples(linked: DataFrame, lex: Lexicons) -> DataFrame:
@@ -178,6 +181,21 @@ def emit_triples(linked: DataFrame, lex: Lexicons) -> DataFrame:
     return emit_mention_triples(linked).unionByName(
         dedupable, allowMissingColumns=True
     )
+
+
+def linked_triples(turns: DataFrame, lex: Lexicons) -> DataFrame:
+    """Stages 1-3, the front every entry point shares: linked mentions,
+    materialized once, then the four triple families.
+
+    The linked set is the only input of all four emit families, so it is
+    materialized before any of them reads it (a localCheckpoint, which also
+    cuts the UDF lineage out of every downstream plan). Eager, because AQE
+    runs the emit union's branches as concurrent query-stage jobs, and
+    concurrent first readers of a persisted-but-unmaterialized plan race:
+    each branch recomputed the full scan in parallel (observed as N
+    identical stages splitting the cores N ways)."""
+    linked = extract_linked_mentions(turns, lex).localCheckpoint(eager=True)
+    return emit_triples(linked, lex)
 
 
 def build_nodes_for_edges(edges: DataFrame, lex: Lexicons) -> DataFrame:
@@ -229,7 +247,7 @@ def _predicate_census(
     is its own pre-image) — the only predicates along which normalization
     can create duplicate triples. The predicate column is
     dictionary-cardinality, so the distinct is a map-side-collapsed
-    aggregate over the (persisted) edge table; the rest is driver
+    aggregate over the edge table; the rest is driver
     arithmetic on two tiny sets. Returns the map's raw key set too so
     ``_finalize_graph`` doesn't re-collect it.
 
@@ -251,35 +269,29 @@ def _predicate_census(
 
 
 def canonicalize_graph(
-    nodes: DataFrame, edges: DataFrame, lex: Lexicons, remap_edges: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, int | None]:
-    """Stage 4: returns (nodes, edges, norm_map, failures, n_norm).
+    nodes: DataFrame, lex: Lexicons
+) -> tuple[DataFrame, DataFrame, DataFrame, int | None]:
+    """Stage 5, node side: returns (nodes, norm_map, failures, n_norm).
+
+    Edges are not touched here: ``_finalize_graph`` folds the endpoint remap,
+    predicate rewrite and dedup into one split pass over the pre-remap
+    edges, instead of layering the dedup's branches on top of an
+    already-joined edge plan.
 
     ``n_norm`` is the measured norm-map row count — returned explicitly so
     callers (``_finalize_graph``) reuse it instead of re-running the count
     job; one fewer driver-only gap in the 46-job timeline (BENCH.md §1e).
-    (Previously stashed as a dynamic ``norm_map.kg_count`` attribute, which
-    any select/filter on norm_map would have silently dropped.)
-
-    ``remap_edges=False`` skips the edge-side remap/predicate rewrite and
-    returns ``edges`` untouched — the pipelines use it so they can fold
-    remap + dedup into the single-pass split of ``_finalize_graph`` instead
-    of layering the dedup's branches on top of an already-joined edge plan.
     """
     if lex.id_equivalences is None:
-        return nodes, edges, None, None, None
+        return nodes, None, None, None
     norm_map, failures = normalization_map(nodes, lex.id_equivalences)
-    # Materialize once: three consumers below (subject remap, object remap,
-    # node join) would each re-run the CC-derived plan otherwise. The count
-    # is ~free on the checkpointed blocks and size-guards every downstream
-    # broadcast hint (hints.guarded_broadcast) — the norm map tracks the
-    # observed entity universe, which is NOT bounded at 100 TB.
+    # Materialize once: the node join below and the edge remap in
+    # _finalize_graph would each re-run the CC-derived plan otherwise. The
+    # count is ~free on the checkpointed blocks and size-guards every
+    # downstream broadcast hint (hints.guarded_broadcast) — the norm map
+    # tracks the observed entity universe, which is NOT bounded at 100 TB.
     norm_map = norm_map.localCheckpoint(eager=True)
     n_norm = norm_map.count()
-    if remap_edges:
-        edges = remap_edge_endpoints(edges, norm_map, norm_map_rows=n_norm)
-        if lex.predicate_map is not None:
-            edges = normalize_predicates(edges, lex.predicate_map)
     from ..hints import guarded_broadcast
 
     nm = guarded_broadcast(
@@ -307,7 +319,7 @@ def canonicalize_graph(
             ).otherwise(F.col("properties")).alias("properties"),
         )
     )
-    return nodes, edges, norm_map, failures, n_norm
+    return nodes, norm_map, failures, n_norm
 
 
 def _finalize_graph(
@@ -330,7 +342,7 @@ def _finalize_graph(
     5-broadcast-join chain on BOTH union branches — measured 2.4× slower than
     even a full-stream dedup at 8M turns. Here the split condition is an
     ``isin`` over driver-collected sets (Catalyst compiles >10 literals to a
-    hash-set ``InSet``), evaluated directly against the persisted edge cache:
+    hash-set ``InSet``), evaluated directly against the pre-remap edge input:
 
       touched ⇔ subject ∈ nm_ids ∨ object ∈ nm_ids ∨ predicate ∈ pred_touch
 
@@ -487,49 +499,39 @@ def write_graph_artifacts(out: dict, lex: Lexicons, output_dir: str,
         )
 
 
-def run_pipeline(
-    transcripts: DataFrame,
+def build_graph(
+    edges: DataFrame,
     lex: Lexicons,
     output_dir: str | None = None,
     compute_metadata: bool = True,
     graph_id: str = "graph",
 ) -> dict:
-    """One-shot (non-checkpointed) run. Returns dict with nodes/edges/
-    metadata/norm artifacts — the Spark analog of midas.pipeline.run_pipeline.
+    """Stages 4-8, the tail every batch entry point shares: node build →
+    background predicate census → canonicalize → finalize (or a plain node
+    merge when there is no equivalence table) → metadata → tables and
+    artifacts under ``output_dir``. ``edges`` are the deduped pre-remap
+    triples (emit / cross-bucket dedup guarantees uniqueness on
+    (subject, predicate, object), which ``_finalize_graph`` relies on).
 
-    Reuse points are persisted, and only NARROW data is persisted: the four
-    emit families consume just (conv_id, turn_idx, entity_id, entity_type),
-    so the wide mention stream (term/token_pos strings) is traversed exactly
-    once — scan → link-agg → distinct — and the small distinct projection is
-    what gets cached and re-read. Without this the mention-scan UDF DAG
-    re-executed once per consumer (observed 8× at bench scale).
-    MEMORY_AND_DISK so a 100 TB run degrades to spill, never recompute."""
-    from pyspark import StorageLevel
+    Returns dict with nodes/edges/norm_map/failures (+ metadata) — the
+    Spark analog of midas.pipeline.run_pipeline's outputs.
 
-    linked = (
-        extract_linked_mentions(transcripts, lex, keep_term=False)
-        .select("conv_id", "turn_idx", "entity_id", "entity_type")
-        .dropDuplicates()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize the cache with ONE action before any consumer: AQE runs the
-    # emit-union's branches as concurrent query-stage jobs, and concurrent
-    # first-readers of a persisted-but-unmaterialized plan RACE — each branch
-    # recomputed the full scan in parallel (observed as N identical 10s
-    # stages splitting the cores N ways; scaling went flat).
-    linked.count()
-    edges = emit_triples(linked, lex).persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()  # same reasoning: node-build + canonicalize + export fan out
-    # Predicate census on a BACKGROUND thread, overlapped with the node
-    # build + canonicalization jobs below: it is one read-only pass over the
-    # just-materialized edge cache plus a tiny predicate-map collect, and
-    # running it serially was a measured driver-only gap in the 46-job
-    # timeline (BENCH.md §1e/§1f — ~3% of wall at 32M turns). Safe to
-    # overlap: no session-conf flips, nothing pinned/unpinned on either
-    # side while it runs (see session.unpersist_new_rdds's warning — the
-    # canonicalize path only checkpoints, never diff-releases).
+    Cache ownership: the pre-canonicalize node cache made here is released
+    once the outputs are written under ``output_dir``. With
+    ``output_dir=None`` it stays persisted for the caller, whose reads of
+    the returned lazy nodes/edges go through it."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import StorageLevel
+
+    # Predicate census on a BACKGROUND thread, overlapped with the node
+    # build + canonicalization jobs below: it is one read-only pass over the
+    # edges plus a tiny predicate-map collect, and running it serially was a
+    # measured driver-only gap in the 46-job timeline (BENCH.md §1e/§1f —
+    # ~3% of wall at 32M turns). Safe to overlap: no session-conf flips,
+    # nothing pinned/unpinned on either side while it runs (see
+    # session.unpersist_new_rdds's warning — the canonicalize path only
+    # checkpoints, never diff-releases).
     pool = ThreadPoolExecutor(max_workers=1)
     try:
         census = pool.submit(_predicate_census, edges, lex.predicate_map)
@@ -537,11 +539,9 @@ def run_pipeline(
         # pulled through normalization_map's CC materialization, once again
         # when the final nodes plan is forced. Narrow (id, name, category)
         # rows → persist is bounded and spills, never recomputes.
-        nodes = build_nodes_for_edges(edges, lex).persist(StorageLevel.MEMORY_AND_DISK)
-        nodes.count()
-        nodes, edges, norm_map, failures, n_norm = canonicalize_graph(
-            nodes, edges, lex, remap_edges=False
-        )
+        nodes_pre = build_nodes_for_edges(edges, lex).persist(StorageLevel.MEMORY_AND_DISK)
+        nodes_pre.count()
+        nodes, norm_map, failures, n_norm = canonicalize_graph(nodes_pre, lex)
         ambiguous, pred_keys = census.result()
     finally:
         # cancel_futures: if canonicalize_graph raised before the census
@@ -552,10 +552,10 @@ def run_pipeline(
     # Endpoint ids are distinct by construction (build_nodes_for_edges), so
     # only canonicalization targets can collide — merge just those and
     # bypass the two-shuffle aggregate for the per-turn node bulk. Same
-    # argument on the edge side: emit already deduped, so only edges whose
-    # endpoints were canonicalized (or whose predicate is an ambiguous
-    # normalization target) can have become duplicates. _finalize_graph
-    # performs remap + rewrite + dedup in one expression-split pass.
+    # argument on the edge side: only edges whose endpoints were
+    # canonicalized (or whose predicate is an ambiguous normalization
+    # target) can have become duplicates. _finalize_graph performs remap +
+    # rewrite + dedup in one expression-split pass.
     if norm_map is not None:
         nodes, edges = _finalize_graph(
             nodes, edges, norm_map, lex.predicate_map, ambiguous,
@@ -563,7 +563,7 @@ def run_pipeline(
             pred_keys=pred_keys,
         )
     else:
-        # No remap and no predicate rewrite happened: the emit-stage dedup
+        # No remap and no predicate rewrite happened: the input's uniqueness
         # on (subject, predicate, object) still holds, so a further dedup
         # would shuffle the full triple stream to remove nothing.
         nodes = merge_nodes(nodes)
@@ -573,6 +573,35 @@ def run_pipeline(
     if output_dir:
         _write_graph_tables(nodes, edges, output_dir)
         write_graph_artifacts(out, lex, output_dir, graph_id)
+        nodes_pre.unpersist()
+    return out
+
+
+def run_pipeline(
+    transcripts: DataFrame,
+    lex: Lexicons,
+    output_dir: str | None = None,
+    compute_metadata: bool = True,
+    graph_id: str = "graph",
+) -> dict:
+    """One-shot (non-checkpointed) run: ``build_graph(linked_triples(...))``.
+
+    The triples are persisted (MEMORY_AND_DISK, so a 100 TB run degrades to
+    spill, never recompute) and materialized with one action before the
+    tail fans out over them: node build, census, finalize, metadata and
+    export all read them.
+
+    Cache ownership: with ``output_dir`` the triple and node caches are
+    released once the outputs are written. With ``output_dir=None`` they
+    stay persisted for the caller, who forces the returned lazy
+    nodes/edges through them."""
+    from pyspark import StorageLevel
+
+    edges = linked_triples(transcripts, lex).persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count()
+    out = build_graph(edges, lex, output_dir, compute_metadata, graph_id)
+    if output_dir:
+        edges.unpersist()
     return out
 
 
@@ -628,8 +657,11 @@ def run_pipeline_checkpointed(
     graph_id: str = "graph",
     compute_metadata: bool = True,
 ) -> dict:
-    """Resumable run: per-bucket triple extraction with atomic commit +
-    checkpoint row; final canonicalize/merge over all bucket outputs.
+    """Resumable run: per bucket, ``linked_triples`` → atomic write →
+    checkpoint row; then ``build_graph`` over all bucket outputs. The
+    triples are already on disk, so the tail reads them from there rather
+    than from a cache; the tail releases its node cache once the outputs
+    are written.
 
     ``fail_after_bucket`` is a test hook: raise after committing K buckets to
     exercise resume semantics (SURVEY.md §5.2 resume tests).
@@ -645,17 +677,10 @@ def run_pipeline_checkpointed(
     for b in range(n_buckets):
         if b in done:
             continue
-        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        linked = (
-            extract_linked_mentions(part, lex, keep_term=False)
-            .select("conv_id", "turn_idx", "entity_id", "entity_type")
-            .dropDuplicates()
-            .localCheckpoint(eager=True)  # eager: emit branches run concurrently
-        )
-        edges = emit_triples(linked, lex)
         t0 = time.time()
+        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
         edge_path = f"{output_dir.rstrip('/')}/triples/bucket={b}"
-        edges.write.mode("overwrite").parquet(edge_path)
+        linked_triples(part, lex).write.mode("overwrite").parquet(edge_path)
         n_edges = spark.read.parquet(edge_path).count()
         n_turns = part.count()
         ckpt = {
@@ -682,37 +707,4 @@ def run_pipeline_checkpointed(
             raise RuntimeError(f"induced failure after bucket {b}")
 
     raw = spark.read.parquet(f"{output_dir.rstrip(chr(47))}/triples")
-    edges = combine_bucket_triples(raw)
-    nodes = build_nodes_for_edges(edges, lex)
-    # background census overlapped with canonicalization (same reasoning and
-    # safety argument as run_pipeline)
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        census = pool.submit(_predicate_census, edges, lex.predicate_map)
-        nodes, edges, norm_map, failures, n_norm = canonicalize_graph(
-            nodes, edges, lex, remap_edges=False
-        )
-        ambiguous, pred_keys = census.result()
-    finally:
-        # same reasoning as run_pipeline: don't start a queued census while
-        # unwinding from a canonicalize failure
-        pool.shutdown(wait=False, cancel_futures=True)
-    if norm_map is not None:
-        # Post-remap collisions (two clique members mentioned in one turn
-        # collapsing onto one canonical object) were previously left in the
-        # checkpointed output — run_pipeline deduped them, this path did not.
-        nodes, edges = _finalize_graph(
-            nodes, edges, norm_map, lex.predicate_map, ambiguous,
-            norm_map_rows=n_norm,
-            pred_keys=pred_keys,
-        )
-    else:
-        nodes = merge_nodes(nodes)
-    _write_graph_tables(nodes, edges, output_dir)
-    out = {"nodes": nodes, "edges": edges, "norm_map": norm_map, "failures": failures}
-    if compute_metadata:
-        out["metadata"] = graph_metadata(nodes, edges)
-    write_graph_artifacts(out, lex, output_dir, graph_id)
-    return out
+    return build_graph(combine_bucket_triples(raw), lex, output_dir, compute_metadata, graph_id)

@@ -7,9 +7,11 @@ path the Spark-idiomatic way:
 
 - ``readStream`` over the transcript table directory (new parquet files =
   new conversations/turns);
-- ``foreachBatch`` reuses the SAME batch operators (extract → link → emit) on
-  each micro-batch, so streaming and batch share one implementation and one
-  test surface;
+- ``foreachBatch`` runs the batch pipeline's front,
+  ``plans.pipeline.linked_triples`` (extract → link → emit), on each
+  micro-batch — the same function ``run_pipeline`` and every bucket of
+  ``run_pipeline_checkpointed`` call — so streaming and batch share one
+  implementation and one test surface;
 - ``Trigger.AvailableNow`` drains everything currently available then stops —
   the incremental-catch-up pattern (run nightly, process only new files);
 - the streaming checkpointLocation tracks consumed source files exactly-once
@@ -22,10 +24,10 @@ path the Spark-idiomatic way:
   defense, complementing the batch pipeline's bucket-level checkpoint table
   (plans/pipeline.py).
 
-Scale notes: per micro-batch work is the already-optimized batch plan
-(conv_id co-partitioning, broadcast lexicons). Triples append to a parquet
-sink; the dedup/canonicalize/merge stages run as a periodic batch compaction
-over the appended triples — the standard lambda-ish split for monotone
+Scale notes: per micro-batch work is the batch front's plan (conv_id
+co-partitioning, broadcast lexicons). Triples append to a parquet sink; the
+dedup/canonicalize/merge stages run as a periodic batch compaction over the
+appended triples — the standard lambda-ish split for monotone
 extract + non-monotone merge.
 """
 
@@ -36,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..datagen.transcripts import TRANSCRIPT_SCHEMA
-from ..plans.pipeline import Lexicons, emit_triples, extract_linked_mentions
+from ..plans.pipeline import Lexicons, linked_triples
 
 
 def stream_triples(
@@ -69,13 +71,7 @@ def stream_triples(
     lex.broadcast_entries()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        linked = (
-            extract_linked_mentions(batch_df, lex, keep_term=False)
-            .select("conv_id", "turn_idx", "entity_id", "entity_type")
-            .dropDuplicates()
-            .localCheckpoint(eager=True)  # emit branches fan out concurrently
-        )
-        edges = emit_triples(linked, lex).withColumn("_batch_id", F.lit(batch_id))
+        edges = linked_triples(batch_df, lex).withColumn("_batch_id", F.lit(batch_id))
         # idempotent under foreachBatch replay: dynamic overwrite touches
         # only this batch's partition
         (

@@ -6,7 +6,6 @@ import pytest
 from adding_datasets_to_kg_spark.datagen import transcripts as dg
 from adding_datasets_to_kg_spark.plans.pipeline import (
     Lexicons,
-    ordered_turns,
     run_pipeline,
     run_pipeline_checkpointed,
 )
@@ -47,6 +46,20 @@ def triple_set(edges_df):
     }
 
 
+def node_rows(nodes_df):
+    """Sorted node rows with order-free category and property values."""
+    return sorted(
+        (
+            r["id"],
+            r["name"],
+            tuple(sorted(r["category"] or [])),
+            tuple(sorted((r["properties"] or {}).items())),
+            r["properties"] is None,
+        )
+        for r in nodes_df.collect()
+    )
+
+
 def test_triples_match_oracle(result, corpus_rows):
     got = triple_set(result["edges"])
     want = expected_triples(corpus_rows)
@@ -57,17 +70,6 @@ def test_triples_match_oracle(result, corpus_rows):
     assert recall >= 0.95, f"recall {recall}: missing={sorted(want - got)[:10]}"
     # at this scale we expect exact agreement
     assert got == want
-
-
-def test_turn_ordering_invariant(corpus):
-    """Per-turn text equality under stable turn ordering: window row_number
-    over turn_idx restores logical order despite shuffled physical layout."""
-    ot = ordered_turns(corpus)
-    bad = ot.filter(F.col("turn_rank") != F.col("turn_idx") + 1).count()
-    assert bad == 0
-    # text is keyed stably: (conv_id, turn_idx) → exactly one text value
-    dup = ot.groupBy("conv_id", "turn_idx").count().filter("count > 1").count()
-    assert dup == 0
 
 
 def test_merge_idempotent(result, lex):
@@ -89,6 +91,10 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
     """The pipeline's targeted node merge (aggregate only over
     canonicalization-target ids, bypass for construction-unique rows) must
     produce exactly the rows the full two-phase merge produces."""
+    from adding_datasets_to_kg_spark.operators.canonicalize import (
+        normalize_predicates,
+        remap_edge_endpoints,
+    )
     from adding_datasets_to_kg_spark.operators.merge import (
         dedup_edges,
         dedup_edges_targeted,
@@ -103,31 +109,15 @@ def test_targeted_merge_equals_full_merge(corpus, lex):
         extract_linked_mentions,
     )
 
-    linked = (
-        extract_linked_mentions(corpus, lex)
-        .select("conv_id", "turn_idx", "entity_id", "entity_type")
-        .dropDuplicates()
-    )
-    edges_pre = emit_triples(linked, lex)
+    edges_pre = emit_triples(extract_linked_mentions(corpus, lex), lex)
     nodes = build_nodes_for_edges(edges_pre, lex)
-    nodes, edges, norm_map, _, _ = canonicalize_graph(nodes, edges_pre, lex)
+    nodes, norm_map, _, _ = canonicalize_graph(nodes, lex)
+    edges = normalize_predicates(remap_edge_endpoints(edges_pre, norm_map), lex.predicate_map)
     canon_ids = norm_map.select(F.col("canonical_id").alias("id"))
     full = merge_nodes(nodes)
     targeted = merge_nodes_targeted(nodes, canon_ids)
 
-    def rows(df):
-        return sorted(
-            (
-                r["id"],
-                r["name"],
-                tuple(sorted(r["category"] or [])),
-                tuple(sorted((r["properties"] or {}).items())),
-                r["properties"] is None,
-            )
-            for r in df.collect()
-        )
-
-    assert rows(full) == rows(targeted)
+    assert node_rows(full) == node_rows(targeted)
     # the merge path must actually have merged something (norm map non-empty)
     assert norm_map.count() > 0
 
@@ -162,36 +152,16 @@ def test_finalize_graph_expr_split_equals_join_fallback(corpus, lex):
         extract_linked_mentions,
     )
 
-    linked = (
-        extract_linked_mentions(corpus, lex)
-        .select("conv_id", "turn_idx", "entity_id", "entity_type")
-        .dropDuplicates()
-    )
-    edges_pre = emit_triples(linked, lex)
-    nodes_pre = build_nodes_for_edges(edges_pre, lex)
-    nodes, edges, norm_map, _, _ = canonicalize_graph(
-        nodes_pre, edges_pre, lex, remap_edges=False
-    )
+    edges = emit_triples(extract_linked_mentions(corpus, lex), lex)
+    nodes, norm_map, _, _ = canonicalize_graph(build_nodes_for_edges(edges, lex), lex)
     assert norm_map.count() > 0  # the split must actually be exercised
-    ambig = _predicate_census(edges_pre, lex.predicate_map)[0]
+    ambig = _predicate_census(edges, lex.predicate_map)[0]
 
     n_expr, e_expr = _finalize_graph(nodes, edges, norm_map, lex.predicate_map, ambig)
     # max_inset_ids=0 forces the broadcast-join fallback on the same inputs
     n_join, e_join = _finalize_graph(
         nodes, edges, norm_map, lex.predicate_map, ambig, max_inset_ids=0
     )
-
-    def node_rows(df):
-        return sorted(
-            (
-                r["id"],
-                r["name"],
-                tuple(sorted(r["category"] or [])),
-                tuple(sorted((r["properties"] or {}).items())),
-                r["properties"] is None,
-            )
-            for r in df.collect()
-        )
 
     def edge_keys(df):
         return sorted(
@@ -343,26 +313,27 @@ def test_load_lexicons_from_parquet_dir(spark, tmp_path, corpus, lex):
     assert key(got["edges"]) == key(want["edges"])
 
 
-def test_lean_linking_equals_full_linking(spark, corpus, lex):
-    """keep_term=False (the pipeline's shuffle-lean projection — term_len
-    int instead of the term string through the conv_id exchange and the
-    min_by buffers) must pick the IDENTICAL winners as the term-keeping
-    mode: the tiebreak key (-length(term), entity_id) is unchanged, so the
-    outputs agree exactly on every non-term column."""
+def test_extract_linked_mentions_matches_oracle(corpus, corpus_rows, lex):
+    """extract_linked_mentions returns exactly the distinct
+    (conv_id, turn_idx, entity_id, entity_type) set of the pure-Python
+    mention oracle's best-candidate links — the lean set every emit family
+    reads, with no surface form or token position left in it."""
     from adding_datasets_to_kg_spark.plans.pipeline import extract_linked_mentions
 
-    full = extract_linked_mentions(corpus, lex, keep_term=True)
-    lean = extract_linked_mentions(corpus, lex, keep_term=False)
-    cols = ["conv_id", "turn_idx", "token_pos", "entity_id", "entity_type"]
-    assert sorted(lean.columns) == sorted(cols)
+    from .oracle import build_dictionary, detect
 
-    def rows(df):
-        return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-    got_full = rows(full.select(*cols))
-    got_lean = rows(lean)
-    assert got_full == got_lean
-    assert got_lean  # fixture actually produced mentions
+    table = build_dictionary()
+    want = {
+        (conv_id, turn_idx, eid, etype)
+        for conv_id, turn_idx, _role, text, _tool, _ts in corpus_rows
+        for _surface, eid, etype, _pos in detect(text or "", table)
+    }
+    linked = extract_linked_mentions(corpus, lex)
+    assert linked.columns == ["conv_id", "turn_idx", "entity_id", "entity_type"]
+    rows = [tuple(r) for r in linked.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == want
+    assert want  # fixture actually produced mentions
 
 
 def test_graph_metadata_matches_committed_golden(result):
@@ -533,3 +504,38 @@ def test_pipeline_output_readable_via_icetable(tmp_path, corpus, lex, spark):
     ).first()[0]
     pruned = read_table(spark, out_dir, "kg_nodes", buckets=[b])
     assert pruned.filter(F.col("id") == some_id).count() == 1
+
+
+def test_one_shot_and_checkpointed_paths_agree(tmp_path, corpus, lex, result):
+    """run_pipeline and run_pipeline_checkpointed share one front and one
+    tail, so on the same corpus they build the same graph: identical node
+    rows and identical edge rows, provenance columns included, at one
+    bucket and across several."""
+    cols = ["subject", "predicate", "object", "primary_knowledge_source",
+            "original_subject", "original_object"]
+
+    def edge_rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    want_nodes, want_edges = node_rows(result["nodes"]), edge_rows(result["edges"])
+    assert want_edges
+    for n_buckets in (1, 3):
+        got = run_pipeline_checkpointed(
+            corpus, lex, str(tmp_path / f"b{n_buckets}"), n_buckets=n_buckets,
+            compute_metadata=False,
+        )
+        assert node_rows(got["nodes"]) == want_nodes, n_buckets
+        assert edge_rows(got["edges"]) == want_edges, n_buckets
+
+
+def test_entry_points_release_their_caches(tmp_path, corpus, lex, spark):
+    """With an output dir, both entry points unpersist the triple and node
+    caches they created once the outputs are written, so a long-lived
+    session does not accumulate them run after run."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    run_pipeline(corpus, lex, output_dir=str(tmp_path / "oneshot"), compute_metadata=False)
+    assert cache_manager.isEmpty()
+    run_pipeline_checkpointed(corpus, lex, str(tmp_path / "ckpt"), n_buckets=2,
+                              compute_metadata=False)
+    assert cache_manager.isEmpty()

@@ -63,14 +63,12 @@ def test_mention_scan_udf_single_evaluation(spark):
     assert plan.count("ArrowEvalPython") <= 1
 
 
-@pytest.mark.parametrize("keep_term", [True, False])
-def test_mention_stream_shuffles_exactly_once(spark, keep_term):
+def test_mention_stream_shuffles_exactly_once(spark):
     """The flagship pipeline optimization (plans/pipeline.py
     extract_linked_mentions): one explicit conv_id repartition placed after
     the UDF serves the link aggregate AND the distinct — the whole mention
-    stream must plan exactly ONE shuffle exchange, in BOTH the term-keeping
-    mode and the pipeline's lean keep_term=False mode (term_len projected
-    below the repartition must not defeat the satisfies check)."""
+    stream must plan exactly ONE shuffle exchange (term_len projected below
+    the repartition must not defeat the satisfies check)."""
     import re
 
     from adding_datasets_to_kg_spark.datagen import transcripts as dg
@@ -82,10 +80,7 @@ def test_mention_stream_shuffles_exactly_once(spark, keep_term):
         variant=dg.variant_lexicon_df(spark),
     )
     t = spark.createDataFrame(dg.generate_corpus(5, seed=1), dg.TRANSCRIPT_SCHEMA)
-    linked = extract_linked_mentions(t, lex, keep_term=keep_term).select(
-        "conv_id", "turn_idx", "entity_id", "entity_type"
-    ).dropDuplicates()
-    plan = plan_of(linked)
+    plan = plan_of(extract_linked_mentions(t, lex))
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)
     assert len(exchanges) == 1, plan
 
@@ -122,12 +117,7 @@ def test_emit_mention_family_bypasses_dedup_shuffle(spark):
         variant=dg.variant_lexicon_df(spark),
     )
     t = spark.createDataFrame(dg.generate_corpus(5, seed=1), dg.TRANSCRIPT_SCHEMA)
-    linked = (
-        extract_linked_mentions(t, lex)
-        .select("conv_id", "turn_idx", "entity_id", "entity_type")
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    linked = extract_linked_mentions(t, lex).localCheckpoint(eager=True)
     assert n_exchanges(emit_mention_triples(linked)) == 0
 
     dedupable = (

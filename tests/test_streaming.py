@@ -1,21 +1,17 @@
 """Incremental (Structured Streaming) ingest parity + restart semantics.
 
-The stream reuses the batch operators per micro-batch, so the distinct
-(subject, predicate, object) set after draining must equal the batch
-pipeline's pre-canonicalization triple set over the same rows — and a second
-drain after new files arrive must process ONLY the new files (streaming
-checkpoint) while the union still matches batch over everything.
+The stream runs the batch front (linked_triples) per micro-batch, so the
+distinct (subject, predicate, object) set after draining must equal the
+batch pipeline's pre-canonicalization triple set over the same rows — and
+a second drain after new files arrive must process ONLY the new files
+(streaming checkpoint) while the union still matches batch over everything.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from adding_datasets_to_kg_spark.datagen import transcripts as dg
-from adding_datasets_to_kg_spark.plans.pipeline import (
-    Lexicons,
-    emit_triples,
-    extract_linked_mentions,
-)
+from adding_datasets_to_kg_spark.plans.pipeline import Lexicons, linked_triples
 from adding_datasets_to_kg_spark.streaming.incremental import (
     read_streamed_triples,
     stream_triples,
@@ -32,12 +28,9 @@ def lex(spark):
 
 
 def batch_triples(df, lex):
-    linked = extract_linked_mentions(df, lex).select(
-        "conv_id", "turn_idx", "entity_id", "entity_type"
-    ).dropDuplicates()
     return {
         (r["subject"], r["predicate"], r["object"])
-        for r in emit_triples(linked, lex).select("subject", "predicate", "object")
+        for r in linked_triples(df, lex).select("subject", "predicate", "object")
         .distinct().collect()
     }
 
@@ -75,10 +68,7 @@ def test_stream_matches_batch_and_resumes(spark, lex, tmp_path):
     assert got_all == want_all
     # checkpoint really skipped chunk1: the second drain appended only
     # chunk2-sized output (reprocessing chunk1 would roughly double it)
-    linked2 = extract_linked_mentions(chunk2, lex).select(
-        "conv_id", "turn_idx", "entity_id", "entity_type"
-    ).dropDuplicates()
-    chunk2_rows = emit_triples(linked2, lex).count()
+    chunk2_rows = linked_triples(chunk2, lex).count()
     rows_after_second = read_streamed_triples(spark, out_dir).count()
     assert rows_after_second == rows_after_first + chunk2_rows
 
