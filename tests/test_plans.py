@@ -63,12 +63,15 @@ def test_mention_scan_udf_single_evaluation(spark):
     assert plan.count("ArrowEvalPython") <= 1
 
 
-def test_mention_stream_shuffles_exactly_once(spark):
+@pytest.mark.parametrize("redistinct", [True, False])
+def test_mention_stream_shuffles_exactly_once(spark, redistinct):
     """The flagship pipeline optimization (plans/pipeline.py
     extract_linked_mentions): one explicit conv_id repartition placed after
     the UDF serves the link aggregate AND the distinct — the whole mention
     stream must plan exactly ONE shuffle exchange (term_len projected below
-    the repartition must not defeat the satisfies check)."""
+    the repartition must not defeat the satisfies check). A caller that
+    re-applies a distinct over the lean columns must not add a second
+    exchange either: the conv_id partitioning already satisfies it."""
     import re
 
     from adding_datasets_to_kg_spark.datagen import transcripts as dg
@@ -80,7 +83,10 @@ def test_mention_stream_shuffles_exactly_once(spark):
         variant=dg.variant_lexicon_df(spark),
     )
     t = spark.createDataFrame(dg.generate_corpus(5, seed=1), dg.TRANSCRIPT_SCHEMA)
-    plan = plan_of(extract_linked_mentions(t, lex))
+    linked = extract_linked_mentions(t, lex)
+    if redistinct:
+        linked = linked.select("conv_id", "turn_idx", "entity_id", "entity_type").dropDuplicates()
+    plan = plan_of(linked)
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)
     assert len(exchanges) == 1, plan
 
