@@ -1,12 +1,13 @@
-"""Graph merge: n-way union of per-source KGX graphs + dedup-merge into the
+"""Graph merge: dedup-merge of the canonicalized node/edge streams into the
 "goldenKG" node/edge tables.
 
-Reference parity (G4, J8, U1/U2 in SURVEY.md §2):
-- per-source unions        ← /root/reference/src/midas/merge.py:9-10,19-22
+Reference parity (G4, J8 in SURVEY.md §2):
 - node merge semantics     ← orion merge_kgx_files [ORION, public]: same-id
   node records merge (union of categories/properties, one winning name);
   edges are concatenated across sources (goldenKG edge count = Σ source
-  counts per the reference README.md:278-306 census).
+  counts per the reference README.md:278-306 census). The reference's n-way
+  per-source union (merge.py:9-10,19-22) has no counterpart here: the
+  pipeline builds one graph from one triple stream.
 
 Scale notes: the node merge is ONE hash aggregate on id. Hot ids (TP53-style
 hubs appear in every source) make the groupBy skewed, so we pre-aggregate on
@@ -16,8 +17,6 @@ path, which AQE does not split.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -150,8 +149,9 @@ def dedup_edges(edges: DataFrame) -> DataFrame:
     """Exact-key edge dedup on (subject, predicate, object, source).
 
     The reference keeps duplicate edges across sources (counts are additive);
-    within a source the writer emits what the converter emits. We expose
-    dedup as a separate operator so merge() can be configured either way.
+    within a source the writer emits what the converter emits. The pipeline
+    applies it only where a duplicate can arise: across checkpoint buckets
+    and after an endpoint remap or predicate rewrite.
     """
     return edges.dropDuplicates(
         ["subject", "predicate", "object", "primary_knowledge_source"]
@@ -212,17 +212,3 @@ def dedup_edges_targeted(
     rest = flagged.filter(~F.col("_cap")).drop("_cap")
     return capable.unionByName(rest).select(*edges.columns)
 
-
-def merge_graphs(
-    node_dfs: list[DataFrame],
-    edge_dfs: list[DataFrame],
-    dedup_cross_source_edges: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """U1/U2 + J8: union per-source graphs, merge nodes, concat edges
-    (merge.py:19-22 semantics)."""
-    nodes = reduce(DataFrame.unionByName, node_dfs)
-    edges = reduce(DataFrame.unionByName, edge_dfs)
-    merged_nodes = merge_nodes(nodes)
-    if dedup_cross_source_edges:
-        edges = dedup_edges(edges)
-    return merged_nodes, edges

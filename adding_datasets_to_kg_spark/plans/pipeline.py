@@ -13,13 +13,16 @@ Stage map (SURVEY.md §7.1; reference driver src/midas/pipeline.py:21-47):
                                                            (≈ NodeNorm + predicate_map)
   6 finalize     — endpoint remap + predicate rewrite + node merge / edge
                    dedup                                   (≈ merge_kgx_files)
-  7 stats        — metadata dict                           (≈ validate_graph)
-  8 export       — Iceberg-layout kg_nodes / kg_edges + normalization and
-                   metadata artifacts
+  7 export       — Iceberg-layout kg_nodes / kg_edges, read back as the
+                   returned graph
+  8 stats        — metadata dict over that graph, three actions; with an
+                   output dir it reads the written tables, not the triples
+                                                           (≈ validate_graph)
+  9 artifacts    — normalization and metadata files
 
 Two functions hold the stages, and every entry point composes them:
   front  ``linked_triples``  stages 1-3
-  tail   ``build_graph``     stages 4-8
+  tail   ``build_graph``     stages 4-9
 
   run_pipeline               build_graph(linked_triples(turns))
   run_pipeline_checkpointed  per bucket: linked_triples → write → commit;
@@ -435,7 +438,7 @@ def _finalize_graph(
 
 
 def _write_graph_tables(nodes: DataFrame, edges: DataFrame, output_dir: str,
-                        n_buckets: int = 16) -> None:
+                        n_buckets: int = 16) -> tuple[DataFrame, DataFrame]:
     """Materialize the goldenKG node/edge tables in the Iceberg-style layout
     (icetable.write_table): bucketed on the join/lookup key (nodes on id,
     edges on subject), manifest + data dirs under
@@ -449,10 +452,14 @@ def _write_graph_tables(nodes: DataFrame, edges: DataFrame, output_dir: str,
     persisted upstreams): the node table is small next to the edge table,
     so serial writes left cores idle through the node write and through the
     edge stages' tails — concurrent jobs fill both (BENCH.md §1e
-    utilization)."""
+    utilization).
+
+    Returns the written (nodes, edges), read back without the bucket
+    column: everything after the write reads the tables, not the plan that
+    produced them."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..icetable import write_table
+    from ..icetable import read_table, write_table
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fn = pool.submit(write_table, nodes, output_dir, "kg_nodes",
@@ -461,6 +468,9 @@ def _write_graph_tables(nodes: DataFrame, edges: DataFrame, output_dir: str,
                          bucket_col="subject", n_buckets=n_buckets)
         fn.result()
         fe.result()
+    spark = nodes.sparkSession
+    return (read_table(spark, output_dir, "kg_nodes").drop("bucket"),
+            read_table(spark, output_dir, "kg_edges").drop("bucket"))
 
 
 def write_graph_artifacts(out: dict, lex: Lexicons, output_dir: str,
@@ -506,20 +516,24 @@ def build_graph(
     compute_metadata: bool = True,
     graph_id: str = "graph",
 ) -> dict:
-    """Stages 4-8, the tail every batch entry point shares: node build →
+    """Stages 4-9, the tail every batch entry point shares: node build →
     background predicate census → canonicalize → finalize (or a plain node
-    merge when there is no equivalence table) → metadata → tables and
-    artifacts under ``output_dir``. ``edges`` are the deduped pre-remap
-    triples (emit / cross-bucket dedup guarantees uniqueness on
+    merge when there is no equivalence table) → tables under
+    ``output_dir`` → metadata → artifacts. ``edges`` are the deduped
+    pre-remap triples (emit / cross-bucket dedup guarantees uniqueness on
     (subject, predicate, object), which ``_finalize_graph`` relies on).
 
     Returns dict with nodes/edges/norm_map/failures (+ metadata) — the
-    Spark analog of midas.pipeline.run_pipeline's outputs.
+    Spark analog of midas.pipeline.run_pipeline's outputs. With
+    ``output_dir`` the returned nodes/edges are the written ``kg_nodes`` /
+    ``kg_edges`` tables, and the metadata describes them; without it they
+    are the lazy finalized frames.
 
     Cache ownership: the pre-canonicalize node cache made here is released
-    once the outputs are written under ``output_dir``. With
-    ``output_dir=None`` it stays persisted for the caller, whose reads of
-    the returned lazy nodes/edges go through it."""
+    once the outputs are written under ``output_dir`` (after the artifacts:
+    the failures table reads it). With ``output_dir=None`` it stays
+    persisted for the caller, whose reads of the returned lazy nodes/edges
+    go through it."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import StorageLevel
@@ -567,11 +581,12 @@ def build_graph(
         # on (subject, predicate, object) still holds, so a further dedup
         # would shuffle the full triple stream to remove nothing.
         nodes = merge_nodes(nodes)
+    if output_dir:
+        nodes, edges = _write_graph_tables(nodes, edges, output_dir)
     out: dict = {"nodes": nodes, "edges": edges, "norm_map": norm_map, "failures": failures}
     if compute_metadata:
         out["metadata"] = graph_metadata(nodes, edges)
     if output_dir:
-        _write_graph_tables(nodes, edges, output_dir)
         write_graph_artifacts(out, lex, output_dir, graph_id)
         nodes_pre.unpersist()
     return out
@@ -588,13 +603,14 @@ def run_pipeline(
 
     The triples are persisted (MEMORY_AND_DISK, so a 100 TB run degrades to
     spill, never recompute) and materialized with one action before the
-    tail fans out over them: node build, census, finalize, metadata and
-    export all read them.
+    tail fans out over them: node build, census, finalize and export read
+    them. With ``output_dir`` the metadata reads the written tables instead;
+    without it, it reads the lazy graph and so the triples too.
 
     Cache ownership: with ``output_dir`` the triple and node caches are
-    released once the outputs are written. With ``output_dir=None`` they
-    stay persisted for the caller, who forces the returned lazy
-    nodes/edges through them."""
+    released once the outputs are written, and the returned nodes/edges
+    read the written tables. With ``output_dir=None`` they stay persisted
+    for the caller, who forces the returned lazy nodes/edges through them."""
     from pyspark import StorageLevel
 
     edges = linked_triples(transcripts, lex).persist(StorageLevel.MEMORY_AND_DISK)
@@ -661,7 +677,7 @@ def run_pipeline_checkpointed(
     checkpoint row; then ``build_graph`` over all bucket outputs. The
     triples are already on disk, so the tail reads them from there rather
     than from a cache; the tail releases its node cache once the outputs
-    are written.
+    are written, and returns the written ``kg_nodes`` / ``kg_edges``.
 
     ``fail_after_bucket`` is a test hook: raise after committing K buckets to
     exercise resume semantics (SURVEY.md §5.2 resume tests).

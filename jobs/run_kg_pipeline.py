@@ -65,7 +65,6 @@ def main() -> None:
         variant_lexicon_df,
     )
     from adding_datasets_to_kg_spark.icetable import read_table
-    from adding_datasets_to_kg_spark.operators.stats import graph_metadata
     from adding_datasets_to_kg_spark.plans.pipeline import (
         Lexicons,
         load_lexicons,
@@ -105,17 +104,9 @@ def main() -> None:
             transcripts, lex, args.output, n_buckets=args.buckets,
             graph_id=args.graph_id,
         )
-    # both variants computed metadata (and persisted {graph_id}_metadata.json)
-    # already — reuse it, don't re-run the 6 metadata actions
-    md = out.get("metadata") or graph_metadata(out["nodes"], out["edges"])
-    md["wall_sec"] = round(time.time() - t0, 2)
-    # through the Hadoop FS API: --output may be an hdfs:/s3a: root
-    from adding_datasets_to_kg_spark import fsio
-
-    fsio.write_text_atomic(
-        spark, f"{args.output.rstrip('/')}/metadata.json", json.dumps(md, indent=2)
-    )
-    print(json.dumps(md))
+    # both entry points computed the metadata over the written tables and
+    # persisted it as {graph_id}_metadata.json, the job's one metadata file
+    print(json.dumps({**out["metadata"], "wall_sec": round(time.time() - t0, 2)}))
 
 
 if __name__ == "__main__":

@@ -363,22 +363,6 @@ def test_graph_metadata_matches_committed_golden(result):
     )
 
 
-def test_salted_degree_agg_on_hub_skew(spark):
-    """The two-phase salted degree count is exact under hub skew: one node
-    participating in 10k edges vs a long tail of degree-1 nodes."""
-    from adding_datasets_to_kg_spark.operators.stats import node_degrees
-
-    hub = [("HUB", f"t{i}") for i in range(10_000)]
-    tail = [(f"a{i}", f"b{i}") for i in range(500)]
-    edges = spark.createDataFrame(hub + tail, "subject string, object string").select(
-        "subject", F.lit("biolink:mentions").alias("predicate"), "object"
-    )
-    deg = {r["id"]: r["degree"] for r in node_degrees(edges).collect()}
-    assert deg["HUB"] == 10_000
-    assert deg["a7"] == 1 and deg["b7"] == 1
-    assert deg["t123"] == 1
-
-
 def test_canonical_key_join_order_insensitive(spark):
     """J6 property test: shuffled token order yields identical keys."""
     from adding_datasets_to_kg_spark.functions.text import canonical_set_key
@@ -539,3 +523,27 @@ def test_entry_points_release_their_caches(tmp_path, corpus, lex, spark):
     run_pipeline_checkpointed(corpus, lex, str(tmp_path / "ckpt"), n_buckets=2,
                               compute_metadata=False)
     assert cache_manager.isEmpty()
+
+
+def test_build_graph_returns_the_written_tables(tmp_path, corpus, lex, result):
+    """With an output dir, both entry points return the kg_nodes / kg_edges
+    tables they wrote (the returned frames read only the written data
+    files), and the metadata over them equals the metadata of the in-memory
+    graph."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from adding_datasets_to_kg_spark.operators.stats import graph_metadata
+
+    want = graph_metadata(result["nodes"], result["edges"])
+    runs = {
+        "oneshot": run_pipeline(corpus, lex, output_dir=str(tmp_path / "oneshot")),
+        "ckpt": run_pipeline_checkpointed(corpus, lex, str(tmp_path / "ckpt"), n_buckets=2),
+    }
+    for name, out in runs.items():
+        for table, df in (("kg_nodes", out["nodes"]), ("kg_edges", out["edges"])):
+            data_dir = (tmp_path / name / table / "data").resolve()
+            files = [Path(urlparse(f).path).resolve() for f in df.inputFiles()]
+            assert files, (name, table)
+            assert all(data_dir in f.parents for f in files), (name, table, files)
+        assert out["metadata"] == want, name

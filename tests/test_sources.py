@@ -207,6 +207,59 @@ def test_graph_metadata_shape(spark):
     assert md["dangling_edge_count"] == 1
 
 
+def test_graph_metadata_three_actions_match_oracle(spark, monkeypatch):
+    """graph_metadata runs exactly three Spark actions (one grouped count
+    per table and the dangling count) and equals a pure-Python oracle over
+    the collected rows: every category element counts once; a null or
+    empty array, a null element and "" count as __uncategorized__; null
+    predicates and sources keep their None keys."""
+    from collections import Counter
+
+    from adding_datasets_to_kg_spark.operators.stats import graph_metadata
+
+    nodes = spark.createDataFrame(
+        [("A", ["biolink:Gene", "biolink:Protein"]), ("B", ["biolink:Disease"]),
+         ("C", None), ("D", []), ("E", [None]), ("F", [""]),
+         ("G", ["biolink:Gene"]), ("H", ["biolink:Gene", "biolink:Protein"])],
+        "id string, category array<string>",
+    )
+    edges = spark.createDataFrame(
+        [("A", "biolink:affects", "B", "infores:x"),
+         ("A", None, "C", "infores:x"),
+         ("G", "biolink:affects", "B", "infores:y"),
+         ("A", "biolink:affects", "MISSING", "infores:y"),
+         ("MISSING", None, "MISSING2", None)],
+        "subject string, predicate string, object string, primary_knowledge_source string",
+    )
+    node_rows, edge_rows = nodes.collect(), edges.collect()
+    ids = {r["id"] for r in node_rows}
+    exploded = [c for r in node_rows for c in (r["category"] or [None])]
+    want = {
+        "node_count": len(node_rows),
+        "edge_count": len(edge_rows),
+        "category_counts": dict(Counter(c if c else "__uncategorized__" for c in exploded)),
+        "predicate_counts": dict(Counter(r["predicate"] for r in edge_rows)),
+        "source_counts": dict(Counter(r["primary_knowledge_source"] for r in edge_rows)),
+        "dangling_edge_count": len({tuple(r) for r in edge_rows
+                                    if r["subject"] not in ids or r["object"] not in ids}),
+    }
+    assert want["category_counts"]["__uncategorized__"] == 4
+    assert want["predicate_counts"][None] == 2 and want["source_counts"][None] == 1
+
+    actions = []
+    cls = type(nodes)
+    for name in ("collect", "count"):
+        def spy(self, *args, __fn=getattr(cls, name), __name=name, **kwargs):
+            actions.append(__name)
+            return __fn(self, *args, **kwargs)
+        monkeypatch.setattr(cls, name, spy)
+    got = graph_metadata(nodes, edges)
+    monkeypatch.undo()
+
+    assert len(actions) == 3, actions
+    assert got == want
+
+
 def test_icetable_roundtrip_through_file_scheme_uri(spark, tmp_path):
     """Same roundtrip + pruning through an explicit ``file:`` Hadoop URI —
     the manifest and bucket-existence probes go through fsio, so a scheme'd

@@ -50,7 +50,8 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     assert md["dangling_edge_count"] == 0
 
     # durable artifacts land under --output
-    for artifact in ("metadata.json", "kg_nodes", "kg_edges", "_checkpoints"):
+    for artifact in ("goldenKG_metadata.json", "kg_nodes", "kg_edges", "_checkpoints"):
         assert (out_dir / artifact).exists(), artifact
-    disk_md = json.loads((out_dir / "metadata.json").read_text())
+    disk_md = json.loads((out_dir / "goldenKG_metadata.json").read_text())
     assert disk_md["node_count"] == md["node_count"]
+    assert disk_md["edge_count"] == md["edge_count"]
